@@ -876,7 +876,6 @@ def _plan_pooled(
         and len(y_cols) == 1
         and len(x_cols) <= _CLUSTER_FAST_MAX_K
         and len(set(list(x_cols) + list(y_cols))) == len(x_cols) + 1
-        and _os_env.environ.get("HDFE_CLUSTER_FAST", "1") != "0"
     ):
         res = _pooled_cluster_onepass(
             df, y_cols[0], list(x_cols), cluster[0], check_rank, tol
@@ -892,7 +891,6 @@ def _plan_pooled(
         and len(y_cols) == 1
         and len(x_cols) <= _CLUSTER_FAST_MAX_K
         and len(set(list(x_cols) + list(y_cols))) == len(x_cols) + 1
-        and _os_env.environ.get("HDFE_CLUSTER2_FAST", "1") != "0"
     ):
         res = _pooled_cluster2_onepass(
             df, y_cols[0], list(x_cols), cluster[0], cluster[1],
@@ -906,7 +904,6 @@ def _plan_pooled(
         and not get_residual
         and len(set(list(x_cols) + list(y_cols)))
         == len(x_cols) + len(y_cols)
-        and _os_env.environ.get("HDFE_POOLED_FAST", "1") != "0"
     ):
         # One-pass pooled SE paths (r16, guide §1.2): HC1 via the
         # per-row tensor identity, homoskedastic via closed-form RSS.
@@ -1020,8 +1017,6 @@ def _spread_by_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     for itself. Only applied to shuffle-free plans (anything already
     exchanged is already wide; probing ``.rdd`` there would eagerly
     execute upstream stages under AQE)."""
-    if _os_env.environ.get("HDFE_SPREAD_KEYS", "1") == "0":
-        return df
     try:
         lp = df._jdf.queryExecution().logical().toString()
     except Exception:
@@ -1188,7 +1183,6 @@ def _plan_within(
         and cluster is None
         and len(set(x_all + y_cols)) == len(x_all) + len(y_cols)
         and len(x_all) + len(y_cols) <= _WITHIN_FAST_MAX_COLS
-        and _os_env.environ.get("HDFE_WITHIN_FAST", "1") != "0"
     ):
         # Moment fast path (optimization round 15, guide §2.3
         # "aggregate before you shuffle"): the demeaned Gram is a sum
@@ -2400,11 +2394,7 @@ def fit_stats(
         # any decline (or the cancellation guard) falls back to the
         # exact window path unchanged.
         fast = None
-        if (
-            len(set(cols)) == len(cols)
-            and len(cols) <= _WITHIN_FAST_MAX_COLS
-            and _os_env.environ.get("HDFE_WITHIN_FAST", "1") != "0"
-        ):
+        if len(set(cols)) == len(cols) and len(cols) <= _WITHIN_FAST_MAX_COLS:
             fast = _within_moments_gram(df, fe, x_cols, [y])
         if fast is not None:
             _, _, n, M, n_groups, m_loss = fast

@@ -14,9 +14,9 @@ Spark-first re-expression (SURVEY.md §2.1):
 - **Named/built-in functions stay JVM-side**: ``grouped_agg`` compiles
   to ``groupBy().agg(...)`` (hash aggregate with map-side partial
   aggregation — one shuffle of *partial* states, not rows);
-  ``grouped_transform`` compiles to window functions over
-  ``Window.partitionBy(keys)`` with an unbounded frame (one shuffle,
-  no join back).
+  ``grouped_transform`` compiles to that aggregate joined back onto
+  the rows (order-dependent fns: window functions over
+  ``Window.partitionBy(keys)``, one full-data shuffle).
 - **Arbitrary Python functions** go through Arrow-batched
   ``applyInPandas`` (GROUPED_MAP) — the direct analogue of the
   reference's "any callable over the group's ndarray" surface, but
@@ -201,13 +201,11 @@ def grouped_transform(
     Plan (optimization r15): for order-free aggregate fns this compiles
     to ``groupBy().agg()`` + a null-safe join back — the base table is
     not shuffled when AQE broadcasts the level-sized aggregate (see
-    :func:`_transform_via_join`). Order-dependent fns (first/last), or
-    ``HDFE_TRANSFORM_JOIN=0``, keep the window-aggregate plan (a single
-    full-data shuffle on ``keys``). Appended column names follow the
-    same ``{fn}_{col}`` contract as :func:`grouped_agg`.
+    :func:`_transform_via_join`). Order-dependent fns (first/last)
+    keep the window-aggregate plan (a single full-data shuffle on
+    ``keys``). Appended column names follow the same ``{fn}_{col}``
+    contract as :func:`grouped_agg`.
     """
-    import os
-
     keys = _as_list(keys)
     if isinstance(values, dict):
         items = [(c, _as_list(fns)) for c, fns in values.items()]
@@ -225,10 +223,8 @@ def grouped_transform(
     collides = any(
         f"{fn}_{col}" in existing for col, fns in items for fn in fns
     )
-    if (
-        os.environ.get("HDFE_TRANSFORM_JOIN", "1") != "0"
-        and not collides
-        and all(fn in _ORDER_FREE_FNS for _, fns in items for fn in fns)
+    if not collides and all(
+        fn in _ORDER_FREE_FNS for _, fns in items for fn in fns
     ):
         return _transform_via_join(df, keys, items)
     w = Window.partitionBy(*keys)
@@ -254,37 +250,28 @@ def demean(
     Plan (optimization r15, guide §2.4): group means via
     ``groupBy().agg()`` (map-side partials, level-sized exchange)
     joined back null-safely — AQE broadcasts the aggregate when groups
-    ≪ rows, so the base table is never shuffled; the old single
-    full-data window shuffle+sort is kept behind ``HDFE_TRANSFORM_JOIN=0``.
+    ≪ rows, so the base table is never shuffled (no full-data window
+    shuffle+sort).
     """
-    import os
-
     keys = _as_list(keys)
     cols = _as_list(cols)
-    if os.environ.get("HDFE_TRANSFORM_JOIN", "1") != "0":
-        grp = df.groupBy(*keys).agg(
-            *[F.avg(F.col(c)).alias(f"__gm_{c}") for c in cols]
-        )
-        grp = grp.select(
-            *[F.col(k).alias(f"__gk_{k}") for k in keys],
-            *[F.col(f"__gm_{c}") for c in cols],
-        )
-        cond = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"__gk_{k}"))
-            cond = c if cond is None else (cond & c)
-        out = df.join(grp, on=cond, how="left").select(
-            *df.columns,
-            *[
-                (F.col(c) - F.col(f"__gm_{c}")).alias(f"{c}{suffix}")
-                for c in cols
-            ],
-        )
-        return out
-    w = Window.partitionBy(*keys)
-    return df.select(
-        "*",
-        *[(F.col(c) - F.avg(F.col(c)).over(w)).alias(f"{c}{suffix}") for c in cols],
+    grp = df.groupBy(*keys).agg(
+        *[F.avg(F.col(c)).alias(f"__gm_{c}") for c in cols]
+    )
+    grp = grp.select(
+        *[F.col(k).alias(f"__gk_{k}") for k in keys],
+        *[F.col(f"__gm_{c}") for c in cols],
+    )
+    cond = None
+    for k in keys:
+        c = F.col(k).eqNullSafe(F.col(f"__gk_{k}"))
+        cond = c if cond is None else (cond & c)
+    return df.join(grp, on=cond, how="left").select(
+        *df.columns,
+        *[
+            (F.col(c) - F.col(f"__gm_{c}")).alias(f"{c}{suffix}")
+            for c in cols
+        ],
     )
 
 

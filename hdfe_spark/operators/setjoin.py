@@ -59,7 +59,7 @@ def shingle_array(text_col, k: int = 5):
     the sf0.1 shingle stage). Prefer ``word_shingle_frame``, which
     hoists the token array behind a projection boundary so it
     evaluates once per row; this form is kept for callers that need
-    a pure Column (and as the ``HDFE_HOF_HOIST=0`` fallback)."""
+    a pure Column."""
     t = tokens(text_col)
     n = F.size(t)
     return F.when(
@@ -128,33 +128,20 @@ def setsim_join(
     per-document sort+slice (hash agg on id), prefix self-join
     (equi-join on shingle), pair distinct, two id-keyed verify joins.
     """
-    import os
-
-    sid = F.col(id_col)
-    if os.environ.get("HDFE_HOF_HOIST", "1") != "0":
-        # Hoisted token array (see word_shingle_frame): tokens() runs
-        # once per row, not once per shingle. Same values. The
-        # explode is explode_outer + isNotNull-on-output because
-        # InferFiltersFromGenerate's size(sh) > 0 filter under a
-        # plain explode gets predicate-pushed below the hoist with
-        # the full inline expression substituted back in (see
-        # containment_pairs); explode_outer's extra NULL-tok rows for
-        # empty arrays are exactly the rows the guard drops, so
-        # values are identical.
-        base = word_shingle_frame(df, id_col, text_col, shingle_k, "sh")
-        toks = (
-            base.select("id", F.explode_outer("sh").alias("tok"))
-            .filter(F.col("tok").isNotNull())
-            .distinct()
-        )
-    else:
-        base = df.select(
-            sid.alias("id"), shingle_array(F.col(text_col), shingle_k).alias("sh")
-        )
-        toks = (
-            base.select("id", F.explode("sh").alias("tok"))
-            .distinct()
-        )
+    # Hoisted token array (see word_shingle_frame): tokens() runs once
+    # per row, not once per shingle. The explode is explode_outer +
+    # isNotNull-on-output because InferFiltersFromGenerate's
+    # size(sh) > 0 filter under a plain explode gets predicate-pushed
+    # below the hoist with the full inline expression substituted back
+    # in (see containment_pairs); explode_outer's extra NULL-tok rows
+    # for empty arrays are exactly the rows the guard drops, so values
+    # are identical.
+    base = word_shingle_frame(df, id_col, text_col, shingle_k, "sh")
+    toks = (
+        base.select("id", F.explode_outer("sh").alias("tok"))
+        .filter(F.col("tok").isNotNull())
+        .distinct()
+    )
     dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
 
     # Each document's set, sorted ascending by (df, tok): the single
@@ -175,11 +162,10 @@ def setsim_join(
     # exchanges below its final aggregation, but the per-document
     # collect_list + array_sort re-executes per consumer — a
     # query-scoped persist runs it once. Values unchanged (same
-    # lineage); ``HDFE_SETSIM_FUSED=0`` restores the unfused plan.
-    if os.environ.get("HDFE_SETSIM_FUSED", "1") != "0":
-        from hdfe_spark.operators.dedup import _query_scoped_persist
+    # lineage).
+    from hdfe_spark.operators.dedup import _query_scoped_persist
 
-        ordered = _query_scoped_persist(ordered)
+    ordered = _query_scoped_persist(ordered)
     p = (F.col("n") - F.ceil(F.lit(tau) * F.col("n") - F.lit(1e-9)) + F.lit(1)).cast("int")
     prefixes = ordered.select(
         "id", F.explode(F.slice("set", F.lit(1), p)).alias("tok")

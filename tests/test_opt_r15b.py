@@ -2,9 +2,11 @@
 the round): grouped_transform/demean via agg + null-safe join-back,
 and the fused one-pass minhash_dedup signature table.
 
-Contract under test: every new plan computes EXACTLY what the old plan
-computed (the declared-query surface must not drift), including NULL
-keys, NaN values, and empty/None documents.
+Contract under test: every plan computes EXACTLY what its reference
+computes — an inline window expression for the transforms, the
+chained public operators for minhash_dedup (the declared-query surface
+must not drift), including NULL keys, NaN values, and empty/None
+documents.
 """
 
 import math
@@ -12,6 +14,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 
@@ -43,22 +46,23 @@ def _same_rows(a, b):
                 assert va == vb
 
 
-def test_transform_join_parity_null_keys_and_nans(keyed, monkeypatch):
-    """Join path == window path bit-for-bit, including the NULL-key
-    group (null-safe equality) and NaN propagation into the mean."""
+def test_transform_join_parity_null_keys_and_nans(keyed):
+    """Join path == an inline window reference bit-for-bit, including
+    the NULL-key group (null-safe equality) and NaN propagation into
+    the mean."""
     from hdfe_spark.operators.groupby import grouped_transform
 
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    old = _sorted_rows(grouped_transform(keyed, "k", {"v": ["mean", "count", "sum"]}))
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "1")
+    w = Window.partitionBy("k")
+    ref_df = keyed.select(
+        "*",
+        F.avg("v").over(w).alias("mean_v"),
+        F.count("v").over(w).alias("count_v"),
+        F.sum("v").over(w).alias("sum_v"),
+    )
     new_df = grouped_transform(keyed, "k", {"v": ["mean", "count", "sum"]})
-    new = _sorted_rows(new_df)
-    _same_rows(old, new)
+    _same_rows(_sorted_rows(ref_df), _sorted_rows(new_df))
     # schema (names and order) identical too
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    assert new_df.columns == grouped_transform(
-        keyed, "k", {"v": ["mean", "count", "sum"]}
-    ).columns
+    assert new_df.columns == ref_df.columns
 
 
 def test_transform_order_dependent_fns_keep_window_path(keyed):
@@ -71,29 +75,29 @@ def test_transform_order_dependent_fns_keep_window_path(keyed):
     assert "Window" in explain_string(out, "simple")
 
 
-def test_demean_join_parity(keyed, monkeypatch):
+def test_demean_join_parity(keyed):
     from hdfe_spark.operators.groupby import demean
 
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    old_df = demean(keyed, "k", "v")
-    old = _sorted_rows(old_df)
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "1")
+    ref_df = keyed.select(
+        "*", (F.col("v") - F.avg("v").over(Window.partitionBy("k"))).alias("v_dm")
+    )
     new_df = demean(keyed, "k", "v")
-    _same_rows(old, _sorted_rows(new_df))
-    assert new_df.columns == old_df.columns
+    _same_rows(_sorted_rows(ref_df), _sorted_rows(new_df))
+    assert new_df.columns == ref_df.columns
 
 
-def test_demean_multikey_parity(spark, monkeypatch):
+def test_demean_multikey_parity(spark):
     from hdfe_spark.operators.groupby import demean
 
     rows = [("a", 1, 2.0), ("a", 1, 4.0), ("a", 2, 6.0), (None, 1, 8.0),
             (None, 1, 10.0), ("b", None, 12.0)]
     df = spark.createDataFrame(rows, "k1 string, k2 int, v double")
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    old = _sorted_rows(demean(df, ["k1", "k2"], "v"))
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "1")
+    w = Window.partitionBy("k1", "k2")
+    ref = _sorted_rows(
+        df.select("*", (F.col("v") - F.avg("v").over(w)).alias("v_dm"))
+    )
     new = _sorted_rows(demean(df, ["k1", "k2"], "v"))
-    _same_rows(old, new)
+    _same_rows(ref, new)
 
 
 def test_fused_bands_and_set_kernel_bit_identical():
@@ -156,29 +160,36 @@ def test_fused_bands_and_set_kernel_bit_identical():
 
 
 def test_minhash_dedup_fused_parity(spark, sf_dir):
-    """Fused one-pass minhash_dedup == unfused chain, bit-for-bit, on
-    the sf fixture corpus."""
-    import os
-
-    from hdfe_spark.operators.dedup import minhash_dedup
+    """Fused one-pass minhash_dedup == the chained public operators
+    (minhash_candidate_pairs → ngram_jaccard_pairs → left_anti),
+    bit-for-bit, on the sf fixture corpus."""
+    from hdfe_spark.operators.dedup import (
+        minhash_candidate_pairs,
+        minhash_dedup,
+        ngram_jaccard_pairs,
+    )
     from hdfe_spark.sources.tables import load_table
 
     docs = load_table(spark, "documents", sf_dir)
-    os.environ["HDFE_MINHASH_FUSED"] = "0"
     try:
-        old = _sorted_rows(
-            minhash_dedup(docs, num_hashes=128, bands=16, jaccard_threshold=0.8)
+        cand = minhash_candidate_pairs(docs, "text", "doc_id", 128, 16, 5)
+        losers = (
+            ngram_jaccard_pairs(docs, cand, "text", "doc_id", 5)
+            .filter(F.col("jaccard") >= 0.8)
+            .select(F.col("id_b").alias("doc_id"))
+            .distinct()
+        )
+        ref = _sorted_rows(
+            docs.join(losers, on="doc_id", how="left_anti")
             .select("doc_id", "lang", "source")
         )
-        os.environ["HDFE_MINHASH_FUSED"] = "1"
         new = _sorted_rows(
             minhash_dedup(docs, num_hashes=128, bands=16, jaccard_threshold=0.8)
             .select("doc_id", "lang", "source")
         )
     finally:
-        os.environ.pop("HDFE_MINHASH_FUSED", None)
         spark.catalog.clearCache()
-    assert old == new
+    assert ref == new
 
 
 def test_minhash_dedup_fused_single_arrow_hash_pass(spark, sf_dir):

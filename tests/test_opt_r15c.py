@@ -3,7 +3,8 @@ one-pass sandwich (`_pooled_cluster2_onepass`).
 
 Same contract as the one-way guards in test_opt_r15.py: the
 optimization must be invisible in results — every test pins the
-new path's output against the exact four-pass path on the same data.
+one-pass output against the exact four-pass path on the same data
+(forced by patching ``_pooled_cluster2_onepass`` to decline).
 """
 
 import numpy as np
@@ -34,7 +35,7 @@ def test_cluster2_onepass_parity(panel, monkeypatch):
     fast = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True, cluster=["g", "h"]
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_cluster2_onepass", lambda *a, **k: None)
     slow = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True, cluster=["g", "h"]
     )
@@ -83,7 +84,7 @@ def test_cluster2_null_input_same_answer(panel, monkeypatch):
         with_null, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["g", "h"],
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_cluster2_onepass", lambda *a, **k: None)
     b = E.estimate(
         with_null, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["g", "h"],
@@ -100,7 +101,7 @@ def test_cluster2_rank_repair_parity(panel, monkeypatch):
         coll, "y", ["x1", "x2", "x3"], check_rank=True,
         estimate_variance=True, cluster=["g", "h"],
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_cluster2_onepass", lambda *a, **k: None)
     slow = E.estimate(
         coll, "y", ["x1", "x2", "x3"], check_rank=True,
         estimate_variance=True, cluster=["g", "h"],
@@ -116,7 +117,7 @@ def test_cluster2_key_as_regressor(panel, monkeypatch):
     fast = E.estimate(
         panel, "y", ["x1", "g"], estimate_variance=True, cluster=["g", "h"]
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_cluster2_onepass", lambda *a, **k: None)
     slow = E.estimate(
         panel, "y", ["x1", "g"], estimate_variance=True, cluster=["g", "h"]
     )

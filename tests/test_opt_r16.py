@@ -1,8 +1,10 @@
 """Round-16 optimization guards.
 
 Every optimization must be invisible in results: each test pins the
-new path's output against the exact pre-optimization path on the same
-data (the test_opt_r15* contract).
+fast path's output against a reference on the same data — the exact
+path (forced by patching the fast-path function to decline, the same
+``None`` contract production uses) or an independent model (the
+test_opt_r15* contract).
 """
 
 import numpy as np
@@ -61,7 +63,7 @@ def test_cluster2_gate_ratio_env_override(panel, monkeypatch):
         panel, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["id", "g"],
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_cluster2_onepass", lambda *a, **k: None)
     slow = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["id", "g"],
@@ -72,13 +74,13 @@ def test_cluster2_gate_ratio_env_override(panel, monkeypatch):
 
 def test_cluster2_gated_exact_path_same_answer(panel, monkeypatch):
     """With the gate declining (row-identity keys), the default call
-    must equal the kill-switched exact path bit-for-bit (both run the
-    same four-pass plan)."""
+    must equal the forced-exact path bit-for-bit (both run the same
+    four-pass plan)."""
     a = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["id", "g"],
     )
-    monkeypatch.setenv("HDFE_CLUSTER2_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_cluster2_onepass", lambda *a, **k: None)
     b = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True,
         cluster=["id", "g"],
@@ -98,7 +100,7 @@ def test_within_variance_moment_parity(panel, monkeypatch):
         panel, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     slow = E.estimate(
         panel, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
@@ -123,7 +125,7 @@ def test_within_variance_moment_parity_many_levels(spark, monkeypatch):
     fast = E.estimate(
         df, "y", ["x1"], categorical_controls=["g"], estimate_variance=True
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     slow = E.estimate(
         df, "y", ["x1"], categorical_controls=["g"], estimate_variance=True
     )
@@ -134,7 +136,7 @@ def test_within_variance_moment_parity_many_levels(spark, monkeypatch):
 
 def test_within_variance_null_fallback_same_answer(panel, monkeypatch):
     """NULL x → moment pass declines internally → window path → output
-    identical to the kill-switched call."""
+    identical to the forced-exact call."""
     with_null = panel.withColumn(
         "x1", F.when(F.col("id") % 37 == 0, F.lit(None)).otherwise(F.col("x1"))
     )
@@ -142,7 +144,7 @@ def test_within_variance_null_fallback_same_answer(panel, monkeypatch):
         with_null, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     b = E.estimate(
         with_null, "y", ["x1", "x2"], categorical_controls=["g"],
         estimate_variance=True,
@@ -160,7 +162,7 @@ def test_within_variance_perfect_fit_guard(spark, monkeypatch):
     fast = E.estimate(
         df, "y", ["x"], categorical_controls=["g"], estimate_variance=True
     )
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     slow = E.estimate(
         df, "y", ["x"], categorical_controls=["g"], estimate_variance=True
     )
@@ -206,7 +208,7 @@ def test_fit_stats_moment_parity(panel, monkeypatch):
     from hdfe_spark.operators.estimate import fit_stats
 
     fast = fit_stats(panel, "y", ["x1", "x2"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     slow = fit_stats(panel, "y", ["x1", "x2"], categorical_controls=["g"])
     assert fast["n"] == slow["n"]
     assert fast["n_groups"] == slow["n_groups"]
@@ -231,7 +233,7 @@ def test_fit_stats_near_perfect_fit_guard(spark, monkeypatch):
         rows.append((g, x, y))
     df = spark.createDataFrame(rows, "g long, x double, y double")
     fast = fit_stats(df, "y", ["x"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     slow = fit_stats(df, "y", ["x"], categorical_controls=["g"])
     assert np.isclose(fast["rss"], slow["rss"], rtol=1e-6)
     assert np.isclose(fast["f_stat"], slow["f_stat"], rtol=1e-6)
@@ -247,7 +249,7 @@ def test_fit_stats_moment_null_fe_level(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "g int, x double, y double")
     fast = fit_stats(df, "y", ["x"], categorical_controls=["g"])
-    monkeypatch.setenv("HDFE_WITHIN_FAST", "0")
+    monkeypatch.setattr(E, "_within_moments_gram", lambda *a, **k: None)
     slow = fit_stats(df, "y", ["x"], categorical_controls=["g"])
     assert fast["n_groups"] == slow["n_groups"] == 5
     assert np.isclose(fast["r2"], slow["r2"], rtol=1e-7)
@@ -258,7 +260,8 @@ def test_fit_stats_moment_null_fe_level(spark, monkeypatch):
 
 def test_pooled_homosked_onepass_parity(panel, monkeypatch):
     fast = E.estimate(panel, "y", ["x1", "x2"], estimate_variance=True)
-    monkeypatch.setenv("HDFE_POOLED_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_hc1_onepass", lambda *a, **k: None)
+    monkeypatch.setattr(E, "_pooled_homosked_onepass", lambda *a, **k: None)
     slow = E.estimate(panel, "y", ["x1", "x2"], estimate_variance=True)
     assert np.allclose(fast.b, slow.b, rtol=1e-9)
     assert fast.n == slow.n
@@ -270,7 +273,8 @@ def test_pooled_hc1_onepass_parity(panel, monkeypatch):
     fast = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True, robust=True
     )
-    monkeypatch.setenv("HDFE_POOLED_FAST", "0")
+    monkeypatch.setattr(E, "_pooled_hc1_onepass", lambda *a, **k: None)
+    monkeypatch.setattr(E, "_pooled_homosked_onepass", lambda *a, **k: None)
     slow = E.estimate(
         panel, "y", ["x1", "x2"], estimate_variance=True, robust=True
     )
@@ -289,9 +293,12 @@ def test_pooled_onepass_null_fallback(panel, monkeypatch):
     )
     for extra in ({"robust": True}, {}):
         a = E.estimate(bad, "y", ["x1", "x2"], estimate_variance=True, **extra)
-        monkeypatch.setenv("HDFE_POOLED_FAST", "0")
-        b = E.estimate(bad, "y", ["x1", "x2"], estimate_variance=True, **extra)
-        monkeypatch.delenv("HDFE_POOLED_FAST")
+        with monkeypatch.context() as m:
+            m.setattr(E, "_pooled_hc1_onepass", lambda *a, **k: None)
+            m.setattr(E, "_pooled_homosked_onepass", lambda *a, **k: None)
+            b = E.estimate(
+                bad, "y", ["x1", "x2"], estimate_variance=True, **extra
+            )
         assert np.allclose(a.b, b.b, rtol=0, atol=0)
         assert np.allclose(a.V[0], b.V[0], rtol=0, atol=0)
 
@@ -303,12 +310,13 @@ def test_pooled_onepass_rank_repair_parity(panel, monkeypatch):
             coll, "y", ["x1", "x2", "x3"], check_rank=True,
             estimate_variance=True, **extra,
         )
-        monkeypatch.setenv("HDFE_POOLED_FAST", "0")
-        slow = E.estimate(
-            coll, "y", ["x1", "x2", "x3"], check_rank=True,
-            estimate_variance=True, **extra,
-        )
-        monkeypatch.delenv("HDFE_POOLED_FAST")
+        with monkeypatch.context() as m:
+            m.setattr(E, "_pooled_hc1_onepass", lambda *a, **k: None)
+            m.setattr(E, "_pooled_homosked_onepass", lambda *a, **k: None)
+            slow = E.estimate(
+                coll, "y", ["x1", "x2", "x3"], check_rank=True,
+                estimate_variance=True, **extra,
+            )
         assert fast.v_coef_names == slow.v_coef_names
         assert np.allclose(fast.b, slow.b, rtol=1e-9)
         assert np.allclose(fast.V[0], slow.V[0], rtol=1e-7)
@@ -353,7 +361,9 @@ def test_spread_by_keys_still_skips_real_aggregates(spark):
 # -------------------------------------- grouped_transform collision
 
 
-def test_grouped_transform_collision_keeps_window_semantics(spark, monkeypatch):
+def test_grouped_transform_collision_keeps_window_semantics(spark):
+    from pyspark.sql import Window
+
     from hdfe_spark.operators.groupby import grouped_transform
 
     df = spark.createDataFrame(
@@ -366,8 +376,7 @@ def test_grouped_transform_collision_keeps_window_semantics(spark, monkeypatch):
     assert out.columns.count("mean_v") == 1
     got = {(r["k"], r["v"]): r["mean_v"] for r in out.collect()}
     assert got[(1, 2.0)] == 3.0 and got[(2, 10.0)] == 10.0
-    monkeypatch.setenv("HDFE_TRANSFORM_JOIN", "0")
-    ref = grouped_transform(df, "k", ["v"])
+    ref = df.withColumn("mean_v", F.avg("v").over(Window.partitionBy("k")))
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, ref.collect())
     )
@@ -410,7 +419,14 @@ def test_query_scoped_persist_bounded_and_releasable(spark, monkeypatch):
     assert not D._SCOPED_PERSISTS
 
 
-def test_setsim_fused_values_identical(spark, monkeypatch):
+def _word_shingles(text, k):
+    toks = text.lower().split()
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+def test_setsim_fused_values_identical(spark):
+    """The fused setsim_join == a pure-Python all-pairs Jaccard over
+    the same word 5-shingle sets (lowercased whitespace tokens)."""
     from hdfe_spark.operators.setjoin import setsim_join
 
     rows = [
@@ -421,14 +437,23 @@ def test_setsim_fused_values_identical(spark, monkeypatch):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     fused = setsim_join(df, tau=0.5).collect()
-    monkeypatch.setenv("HDFE_SETSIM_FUSED", "0")
-    plain = setsim_join(df, tau=0.5).collect()
+    sets = {i: _word_shingles(t, 5) for i, t in rows}
+    ref = []
+    for a in sets:
+        for b in sets:
+            if a < b:
+                inter = len(sets[a] & sets[b])
+                jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+                if jac >= 0.5:
+                    ref.append((a, b, jac))
     key = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in fused)
-    assert key == sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in plain)
+    assert key == sorted(ref)
     assert key  # non-empty: the near-dup pairs were found
 
 
-def test_ngram_fused_values_identical(spark, sf_dir, monkeypatch):
+def test_ngram_fused_values_identical(spark, sf_dir):
+    """The fused ngram_jaccard_pairs == a pure-Python Jaccard over the
+    same sets (UTF-8 byte 5-grams of the lowercased text)."""
     from hdfe_spark.operators.dedup import ngram_jaccard_pairs
     from hdfe_spark.sources.tables import load_table
 
@@ -439,8 +464,19 @@ def test_ngram_fused_values_identical(spark, sf_dir, monkeypatch):
         .join(docs.select(F.col("doc_id").alias("id_b")), on="id_b")
     )
     fused = ngram_jaccard_pairs(docs, pairs, "text", "doc_id", 5).collect()
-    monkeypatch.setenv("HDFE_NGRAM_FUSED", "0")
-    plain = ngram_jaccard_pairs(docs, pairs, "text", "doc_id", 5).collect()
+
+    def grams(t):
+        b = (t or "").lower().encode("utf-8")
+        return {b[i:i + 5] for i in range(len(b) - 4)}
+
+    sets = {r["doc_id"]: grams(r["text"]) for r in docs.collect()}
+    ref = []
+    for r in fused:
+        sa, sb = sets[r["id_a"]], sets[r["id_b"]]
+        inter = len(sa & sb)
+        union = len(sa) + len(sb) - inter
+        ref.append((r["id_a"], r["id_b"], inter / union if union else 0.0))
+    assert len(fused) == pairs.count()
     assert sorted(
         [(r["id_a"], r["id_b"], r["jaccard"]) for r in fused]
-    ) == sorted([(r["id_a"], r["id_b"], r["jaccard"]) for r in plain])
+    ) == sorted(ref)
